@@ -24,16 +24,17 @@ per-partition lineage + metrics):
   order, map-only, resume-stable) and ``shard_stats`` its manifest.
 
 Every stage commits a snapshot table under ``cfg.out_dir`` and records its
-snapshot id in the runs registry; a re-run with the same ``run_id`` reads
-completed stages back instead of recomputing (pytest-gated, like the
-harvest resume).  At 10^12-turn scale each arrow is one job whose
+snapshot id and row count in the runs registry.  The stages run on the
+executor the harvests share (``jobs.StagedRun``): it reads the run's
+finished stages once, when the run starts, so a re-run with the same
+``run_id`` reads completed stages back instead of recomputing
+(pytest-gated, like the harvest resume), and the result dict takes its
+counts from the stages.  At 10^12-turn scale each arrow is one job whose
 restart cost is bounded by its own stage, not the pipeline.
 """
 
 from __future__ import annotations
 
-import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -47,8 +48,7 @@ from ..operators.packing import (
     shard_manifest,
     shuffle_shards,
 )
-from ..storage import table_for
-from .jobs import MetricsLog, RunLog
+from .jobs import StagedRun
 
 
 @dataclass
@@ -63,7 +63,6 @@ class CurationConfig:
     seq_len: int = 512
     n_shards: int = 32
     decontam_ngram: int = 8
-    extra: dict = field(default_factory=dict)
 
 
 def run_curation(
@@ -76,31 +75,11 @@ def run_curation(
     """Execute (or resume) the curation pipeline; returns the job-result
     dict with per-stage rows/seconds and the final shard statistics."""
     run_id = run_id or f"cur-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder):
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    run = StagedRun(spark, cfg.out_dir, run_id)
 
     docs = spark.read.parquet(docs_path)
 
-    decisions = stage(
+    decisions = run.checkpoint(
         "decisions",
         lambda: curate_corpus(
             docs,
@@ -115,7 +94,7 @@ def run_curation(
         ),
     )
 
-    selected = stage(
+    selected = run.checkpoint(
         "selected",
         lambda: docs.join(
             decisions.filter(F.col("selected")).select("doc_id"),
@@ -124,48 +103,22 @@ def run_curation(
         ),
     )
 
-    packing = stage(
+    packing = run.checkpoint(
         "packing", lambda: pack_sequences(selected, seq_len=cfg.seq_len)
     )
-    segments = stage(
+    segments = run.checkpoint(
         "pack_segments", lambda: pack_manifest(packing, seq_len=cfg.seq_len)
     )
-    shards = stage(
+    shards = run.checkpoint(
         "shards", lambda: shuffle_shards(selected, n_shards=cfg.n_shards)
     )
-    shard_stats = stage("shard_stats", lambda: shard_manifest(shards))
+    run.checkpoint("shard_stats", lambda: shard_manifest(shards))
+    run.record_partitions("shards", shards)
 
-    # lineage is keyed to the run: write it whenever THIS run_id has no
-    # partitions row yet (not merely when some stage ran fresh — a crash
-    # between the last stage commit and this write must be repairable by
-    # resume, else the run's shard lineage is lost forever)
-    metricslog = MetricsLog(spark, os.path.join(cfg.out_dir, "metrics"))
-    have_lineage = metricslog.table.exists() and (
-        metricslog.read()
-        .filter((F.col("run_id") == run_id) & (F.col("stage") == "shards"))
-        .limit(1)
-        .count()
-        > 0
+    return run.finish(
+        run.rows["selected"],
+        num_input_docs=run.rows["decisions"],  # one decision row per input doc
+        num_selected=run.rows["selected"],
+        num_packs=segments.select("stratum", "pack_id").distinct().count(),
+        num_shards=run.rows["shard_stats"],
     )
-    if not have_lineage:
-        metricslog.record_partitions(run_id, "shards", shards)
-
-    # row counts were already computed inside each fresh stage() — reuse
-    # them instead of re-running count jobs; only a resumed stage (absent
-    # from `metrics`) needs a count of its read-back snapshot
-    stage_rows = {s: n for s, n, _ in metrics}
-    n_input = stage_rows.get("decisions")  # one decision row per input doc
-    n_input = docs.count() if n_input is None else n_input
-    n_selected = stage_rows.get("selected")
-    n_selected = selected.count() if n_selected is None else n_selected
-    runlog.record(run_id, "job", "finished", num_triples=n_selected)
-    return {
-        "run_id": run_id,
-        "num_input_docs": n_input,
-        "num_selected": n_selected,
-        "num_packs": segments.select("stratum", "pack_id").distinct().count(),
-        "num_shards": stage_rows.get("shard_stats", None) or shard_stats.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
-    }

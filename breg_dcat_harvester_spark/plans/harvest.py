@@ -7,11 +7,14 @@ staged DataFrame DAG with per-stage snapshot checkpoints:
          -> materialize(nodes, edges) -> num_triples + runs/metrics rows
 
 Stage outputs are snapshot-committed tables (storage.py); the runs table
-records each stage's snapshot id, so a re-run *resumes*: stages whose output
-snapshot already exists for this run_id are skipped and their output is read
-back (north_rule "resumable from Iceberg snapshot checkpoints").  The final
-result dict mirrors the reference job result {"num_triples": N, "sources":
-[...]} (harvest.py:57-60) with transcript lineage in place of source dicts.
+records each stage's snapshot id and row count, so a re-run *resumes*: the
+shared executor (``jobs.StagedRun``) reads this run_id's finished stages once
+when the run starts, skips them and reads their output back (north_rule
+"resumable from Iceberg snapshot checkpoints").  ``run_harvest`` and
+``harvest_increment`` end in the same materialize tail, and the result dict
+takes every row count from the stages instead of recounting.  It mirrors the
+reference job result {"num_triples": N, "sources": [...]}
+(harvest.py:57-60) with transcript lineage in place of source dicts.
 
 Materialize layout (scale-critical):
 * edges/nodes written ``repartition(num_buckets, salted conv_id)`` +
@@ -24,20 +27,22 @@ Materialize layout (scale-critical):
 from __future__ import annotations
 
 import os
-import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import cc as ccm
 from ..operators import link as lnk
+from ..operators.export import partition_lineage
 from ..operators.extract import extract_edges
 from ..operators.merge import merge_triples, num_triples
 from ..operators.validate import conforms_column, partition_valid
 from ..storage import table_for
-from .jobs import MetricsLog, RunLog
+from .jobs import StagedRun
+
+SALT = 4  # sub-splits per bucket for hot conv_ids
 
 
 @dataclass
@@ -50,7 +55,6 @@ class HarvestConfig:
     validation_disabled: bool = False
     all_or_nothing: bool = False  # harvest.py:41-47 semantics when True
     num_buckets: int = 32
-    salt: int = 4  # sub-splits per bucket for hot conv_ids
     # 'transcripts' = the north-star mention-extraction path;
     # 'rdf_docs'    = the reference's literal harvest shape: the input paths
     #                 are RDF documents (xml/turtle/nt/json-ld) parsed by
@@ -65,16 +69,49 @@ class HarvestConfig:
     # ~22% faster even in-memory.  Trade-off: resume granularity drops from
     # (edges_raw, triples) to (triples); transcripts source only.
     fuse_extract_merge: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def _bucketed(df: DataFrame, cfg: HarvestConfig) -> DataFrame:
     """Salted conv_id bucketing + stable within-partition turn order (W5)."""
     bucket = F.pmod(F.hash("conv_id"), F.lit(cfg.num_buckets))
-    salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(cfg.salt))
+    salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(SALT))
     return df.repartition(
-        cfg.num_buckets * cfg.salt, bucket * cfg.salt + salt
+        cfg.num_buckets * SALT, bucket * SALT + salt
     ).sortWithinPartitions("conv_id", "turn_idx")
+
+
+def _materialize(
+    run: StagedRun, valid: DataFrame, labels: DataFrame, cfg: HarvestConfig
+) -> dict:
+    """The tail both harvests share: edges -> nodes -> partition metrics ->
+    lineage -> num_triples -> job record -> result dict."""
+    edges = run.checkpoint(
+        "edges",
+        lambda: ccm.canonicalize_edges(valid, labels).transform(
+            lambda d: _bucketed(d, cfg)
+        ),
+    )
+    run.checkpoint("nodes", lambda: ccm.build_nodes(valid, labels))
+
+    # north_rule lineage, both flavors:
+    # * physical (MetricsLog.record_partitions): rows per materialized
+    #   partition — observability for THIS run's layout, written once per
+    #   run_id (a resume repairs a crash that lost it);
+    # * content-keyed (operators/export.partition_lineage, its own
+    #   checkpointed stage): per salted-conv_id-bucket rollup that is
+    #   deterministic at any parallelism, so a resumed or re-executed run
+    #   must reproduce every row bit-for-bit — the cross-run consistency
+    #   probe (asserted in test_storage_plans).
+    run.record_partitions("edges", edges)
+    run.checkpoint("lineage", lambda: partition_lineage(edges))
+
+    n_triples = num_triples(edges)
+    return run.finish(
+        n_triples,
+        num_triples=n_triples,
+        num_nodes=run.rows["nodes"],
+        num_lineage_buckets=run.rows["lineage"],
+    )
 
 
 def run_harvest(
@@ -85,28 +122,7 @@ def run_harvest(
 ) -> dict:
     """Execute (or resume) a harvest; returns the job-result dict."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder, reader=None):
-        """Run one checkpointed stage (or read back its prior snapshot)."""
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    run = StagedRun(spark, cfg.out_dir, run_id)
 
     if cfg.source_kind == "rdf_docs":
         from ..sources.rdf_parse import parse_rdf_docs, read_rdf_documents
@@ -117,7 +133,7 @@ def run_harvest(
             else [transcripts_path]
         )
         docs = read_rdf_documents(spark, paths)
-        edges_raw = stage(
+        edges_raw = run.checkpoint(
             "edges_raw", lambda: parse_rdf_docs(docs, id_col="source")
         )
     elif cfg.fuse_extract_merge:
@@ -127,21 +143,21 @@ def run_harvest(
         edges_raw = None
     else:
         transcripts = spark.read.parquet(transcripts_path)
-        edges_raw = stage(
+        edges_raw = run.checkpoint(
             "edges_raw",
             lambda: extract_edges(
                 transcripts, emit_provenance=cfg.emit_provenance, impl=cfg.extract_impl
             ),
         )
     if cfg.source_kind == "transcripts" and cfg.fuse_extract_merge:
-        merged = stage(
+        merged = run.checkpoint(
             "triples",
             lambda: merge_triples_transcripts(
                 transcripts, emit_provenance=cfg.emit_provenance
             ),
         )
     else:
-        merged = stage("triples", lambda: merge_triples(edges_raw))
+        merged = run.checkpoint("triples", lambda: merge_triples(edges_raw))
 
     def _validated():
         verdicts = conforms_column(
@@ -155,52 +171,18 @@ def run_harvest(
         table_for(os.path.join(cfg.out_dir, "quarantine")).write(quarantine)
         return valid
 
-    valid = stage("valid_triples", _validated)
+    valid = run.checkpoint("valid_triples", _validated)
 
     # link + CC are their OWN checkpointed stages: both the edges and nodes
     # materializations consume the same snapshot, so the iterative CC loop
     # (the most expensive stage) runs exactly once per run (VERDICT r1
     # §wrong-1 — it used to be recomputed inside each consumer).
-    links = stage(
+    links = run.checkpoint(
         "links", lambda: lnk.link_pairs(valid, threshold=cfg.link_threshold)
     )
-    labels = stage("cc_labels", lambda: ccm.connected_components(links))
+    labels = run.checkpoint("cc_labels", lambda: ccm.connected_components(links))
 
-    edges_final = stage(
-        "edges",
-        lambda: ccm.canonicalize_edges(valid, labels).transform(
-            lambda d: _bucketed(d, cfg)
-        ),
-    )
-    nodes = stage("nodes", lambda: ccm.build_nodes(valid, labels))
-
-    # north_rule lineage, both flavors:
-    # * physical (MetricsLog.record_partitions): rows per materialized
-    #   partition — observability for THIS run's layout;
-    # * content-keyed (operators/export.partition_lineage, its own
-    #   checkpointed stage): per salted-conv_id-bucket rollup that is
-    #   deterministic at any parallelism, so a resumed or re-executed run
-    #   must reproduce every row bit-for-bit — the cross-run consistency
-    #   probe (asserted in test_storage_plans).
-    metricslog = MetricsLog(spark, os.path.join(cfg.out_dir, "metrics"))
-    if metrics:  # only on fresh (non-resumed) materialization
-        metricslog.record_partitions(run_id, "edges", edges_final)
-
-    from ..operators.export import partition_lineage
-
-    lineage = stage("lineage", lambda: partition_lineage(edges_final))
-
-    n_triples = num_triples(edges_final)
-    runlog.record(run_id, "job", "finished", num_triples=n_triples)
-    return {
-        "run_id": run_id,
-        "num_triples": n_triples,
-        "num_nodes": nodes.count(),
-        "num_lineage_buckets": lineage.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
-    }
+    return _materialize(run, valid, labels, cfg)
 
 
 def harvest_increment(
@@ -242,27 +224,7 @@ def harvest_increment(
     incremental ≡ batch equality test asserts it on the corpus.
     """
     run_id = run_id or f"inc-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder):
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    run = StagedRun(spark, cfg.out_dir, run_id)
 
     base_triples = table_for(os.path.join(base_dir, "triples")).read(spark)
     base_valid = table_for(os.path.join(base_dir, "valid_triples")).read(spark)
@@ -270,7 +232,7 @@ def harvest_increment(
     base_labels = table_for(os.path.join(base_dir, "cc_labels")).read(spark)
 
     transcripts = spark.read.parquet(new_transcripts_path)
-    inc_triples = stage(
+    inc_triples = run.checkpoint(
         "inc_triples",
         lambda: merge_triples(
             extract_edges(
@@ -299,7 +261,7 @@ def harvest_increment(
             cond = e if cond is None else (cond & e)
         return inc_triples.join(bt, cond, "left_anti")
 
-    delta = stage("delta_triples", _delta)
+    delta = run.checkpoint("delta_triples", _delta)
     touched = delta.select("subj").distinct()
 
     # the combined triple set of every touched subject (terms are disjoint
@@ -308,9 +270,9 @@ def harvest_increment(
         base_slice = base_triples.join(touched, "subj", "left_semi")
         return base_slice.unionByName(delta)
 
-    touched_slice = stage("touched_slice", _touched_slice)
+    touched_slice = run.checkpoint("touched_slice", _touched_slice)
 
-    merged = stage("triples", lambda: base_triples.unionByName(delta))
+    merged = run.checkpoint("triples", lambda: base_triples.unionByName(delta))
 
     # re-validate ONLY touched subjects, over their combined triple set
     def _updated_valid():
@@ -335,7 +297,7 @@ def harvest_increment(
         kept = base_valid.join(touched, "subj", "left_anti")
         return kept.unionByName(valid_touched)
 
-    valid = stage("valid_triples", _updated_valid)
+    valid = run.checkpoint("valid_triples", _updated_valid)
 
     def _updated_links():
         valid_touched = valid.join(touched, "subj", "left_semi")
@@ -351,7 +313,7 @@ def harvest_increment(
         ).select("entity_type", "a", "b", "g_inter", "g_union")
         return kept.unionByName(inc_links).distinct()
 
-    links = stage("links", _updated_links)
+    links = run.checkpoint("links", _updated_links)
 
     def _updated_labels():
         new_pairs = links.join(
@@ -361,28 +323,6 @@ def harvest_increment(
         ).select("a", "b")
         return ccm.incremental_components(base_labels, new_pairs)
 
-    labels = stage("cc_labels", _updated_labels)
+    labels = run.checkpoint("cc_labels", _updated_labels)
 
-    edges_final = stage(
-        "edges",
-        lambda: ccm.canonicalize_edges(valid, labels).transform(
-            lambda d: _bucketed(d, cfg)
-        ),
-    )
-    nodes = stage("nodes", lambda: ccm.build_nodes(valid, labels))
-
-    from ..operators.export import partition_lineage
-
-    lineage = stage("lineage", lambda: partition_lineage(edges_final))
-
-    n_triples = num_triples(edges_final)
-    runlog.record(run_id, "job", "finished", num_triples=n_triples)
-    return {
-        "run_id": run_id,
-        "num_triples": n_triples,
-        "num_nodes": nodes.count(),
-        "num_lineage_buckets": lineage.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
-    }
+    return _materialize(run, valid, labels, cfg)

@@ -10,16 +10,22 @@ exc_info} (utils.py:32-48) and tail-N listing per registry
 Ours is a runs *table*: one row per (run_id, stage, status transition),
 appended via snapshot commits.  Registry listing = groupBy(status) +
 row_number window (W2); job JSON = the latest row per (run_id, stage).
+
+``StagedRun`` is the one stage protocol the harvest, increment and curation
+plans share: it reads the run's finished stages once, when the run starts,
+and runs or resumes each checkpointed stage against that lookup.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..storage import LocalSnapshotTable
+from ..storage import LocalSnapshotTable, table_for
 
 _RUNS_SCHEMA = (
     "run_id string, stage string, status string, event_at timestamp, "
@@ -62,22 +68,73 @@ class RunLog:
             return self.spark.createDataFrame([], _RUNS_SCHEMA)
         return self.table.read(self.spark)
 
-    def snapshot_for(self, run_id: str, stage: str) -> str | None:
-        """Resume lookup: the snapshot id of a finished stage of this run."""
+    def finished(self, run_id: str) -> dict[str, tuple[str, int]]:
+        """Resume lookup: ``{stage: (snapshot_id, rows)}`` of this run's
+        finished stages (the latest wins).  One read of the runs table, and
+        none while the table does not exist yet."""
         if not self.table.exists():
-            return None
+            return {}
         rows = (
             self.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "finished")
-            )
-            .orderBy(F.desc("event_at"))
-            .limit(1)
+            .filter((F.col("run_id") == run_id) & (F.col("status") == "finished"))
+            .orderBy("event_at")
             .collect()
         )
-        return rows[0].snapshot_id if rows else None
+        return {r.stage: (r.snapshot_id, r.num_triples) for r in rows}
+
+
+class StagedRun:
+    """Execute (or resume) one run as a sequence of checkpointed stages.
+
+    A fresh stage goes 'started' record -> build -> snapshot write -> read
+    back -> count -> 'finished' record ('failed' on error); a stage this run
+    already finished is read back from its snapshot instead.  ``rows`` holds
+    every stage's row count (a resumed one from its 'finished' row), and
+    ``records`` the ``{stage, rows, seconds}`` of the fresh stages only.
+    """
+
+    def __init__(self, spark: SparkSession, out_dir: str, run_id: str):
+        self.spark, self.out_dir, self.run_id = spark, out_dir, run_id
+        self.runlog = RunLog(spark, os.path.join(out_dir, "runs"))
+        self.done = self.runlog.finished(run_id)
+        self.rows: dict[str, int] = {}
+        self.records: list[dict] = []
+
+    def checkpoint(self, name: str, builder) -> DataFrame:
+        """Run stage ``name`` fresh, or read it back if this run finished it."""
+        tbl = table_for(os.path.join(self.out_dir, name))
+        if name in self.done:
+            sid, self.rows[name] = self.done[name]
+            return tbl.read(self.spark, sid)
+        t0 = time.time()
+        self.runlog.record(self.run_id, name, "started")
+        try:
+            sid = tbl.write(builder(), mode="overwrite")
+            out = tbl.read(self.spark, sid)
+            n = self.rows[name] = out.count()
+            self.records.append(
+                {"stage": name, "rows": n, "seconds": round(time.time() - t0, 3)}
+            )
+            self.runlog.record(
+                self.run_id, name, "finished", snapshot_id=sid, num_triples=n
+            )
+            return out
+        except Exception as ex:
+            self.runlog.record(self.run_id, name, "failed", exc_info=repr(ex))
+            raise
+
+    def record_partitions(self, stage: str, df: DataFrame) -> None:
+        """Write ``df``'s per-partition metrics once per run: whenever this
+        run_id has none yet, not merely when some stage ran fresh — a crash
+        between the last stage commit and this write is repaired by resume."""
+        metrics = MetricsLog(self.spark, os.path.join(self.out_dir, "metrics"))
+        if not metrics.has(self.run_id, stage):
+            metrics.record_partitions(self.run_id, stage, df)
+
+    def finish(self, job_rows: int, **result) -> dict:
+        """Record the run's 'job' row; returns the job-result dict."""
+        self.runlog.record(self.run_id, "job", "finished", num_triples=job_rows)
+        return {"run_id": self.run_id, **result, "stages": self.records}
 
 
 def next_fire_date(
@@ -113,6 +170,15 @@ class MetricsLog:
             )
         )
         self.table.write(rows, mode="append")
+
+    def has(self, run_id: str, stage: str) -> bool:
+        return self.table.exists() and (
+            self.read()
+            .filter((F.col("run_id") == run_id) & (F.col("stage") == stage))
+            .limit(1)
+            .count()
+            > 0
+        )
 
     def read(self) -> DataFrame:
         return self.table.read(self.spark)

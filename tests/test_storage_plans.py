@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from breg_dcat_harvester_spark.plans.harvest import HarvestConfig, run_harvest
-from breg_dcat_harvester_spark.plans.jobs import RunLog, job_json, registry_tail
+from breg_dcat_harvester_spark.plans.jobs import (
+    MetricsLog,
+    RunLog,
+    job_json,
+    registry_tail,
+)
 from breg_dcat_harvester_spark.storage import LocalSnapshotTable
 
 
@@ -41,19 +46,36 @@ def test_runlog_and_registries(spark, tmp_path):
         for r in tail.groupBy("status").agg(F.count("*").alias("cnt")).collect()
     }
     assert by_status == {"started": 2, "finished": 2, "failed": 1}
-    assert log.snapshot_for("r1", "extract") == "s1"
-    assert log.snapshot_for("r9", "extract") is None
+    assert log.finished("r1")["extract"] == ("s1", 1)
+    assert log.finished("r9") == {}
     jobs = job_json(runs).collect()
     assert any('"status":"failed"' in r.job for r in jobs)
 
 
+def _count_runs_reads(monkeypatch) -> list:
+    """Record every LocalSnapshotTable.read of a runs table."""
+    reads = []
+    real_read = LocalSnapshotTable.read
+
+    def read(self, *args, **kwargs):
+        if os.path.basename(self.path) == "runs":
+            reads.append(self.path)
+        return real_read(self, *args, **kwargs)
+
+    monkeypatch.setattr(LocalSnapshotTable, "read", read)
+    return reads
+
+
 @pytest.mark.slow
-def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
+def test_harvest_run_and_resume(spark, tmp_path, small_transcripts, monkeypatch):
     src = str(tmp_path / "transcripts")
     small_transcripts.write.parquet(src)
+    runs_reads = _count_runs_reads(monkeypatch)
 
     cfg = HarvestConfig(out_dir=str(tmp_path / "out"), extract_impl="sql")
     res1 = run_harvest(spark, src, cfg, run_id="run-a")
+    # a fresh output dir has no runs table to look up prior stages in
+    assert runs_reads == []
     assert res1["num_triples"] > 0
     assert [s["stage"] for s in res1["stages"]] == [
         "edges_raw", "triples", "valid_triples", "links", "cc_labels",
@@ -71,10 +93,15 @@ def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
     assert [r.status for r in cc_rows].count("finished") == 1
 
     # resume: same run_id -> every stage skipped (no new stage metrics),
-    # identical result
+    # identical result; the finished stages are read once, not per stage
+    runs_reads.clear()
     res2 = run_harvest(spark, src, cfg, run_id="run-a")
+    assert len(runs_reads) <= 1
     assert res2["num_triples"] == res1["num_triples"]
     assert res2["stages"] == []  # all stages resumed from snapshots
+    # resumed row counts come from the finished stages' runs rows
+    assert res2["num_nodes"] == res1["num_nodes"]
+    assert res2["num_lineage_buckets"] == res1["num_lineage_buckets"]
 
     # fresh run id recomputes but matches (determinism)
     res3 = run_harvest(spark, src, cfg, run_id="run-b")
@@ -94,6 +121,44 @@ def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
 
     recomputed = {tuple(r) for r in partition_lineage(edges.repartition(7)).collect()}
     assert rows == recomputed
+
+
+@pytest.mark.slow
+def test_harvest_resume_repairs_lost_partition_metrics(
+    spark, tmp_path, small_transcripts, monkeypatch
+):
+    """A crash after the nodes commit and before the partition metrics are
+    written must not lose them: the resume writes exactly one set."""
+    src = str(tmp_path / "transcripts")
+    small_transcripts.write.parquet(src)
+    cfg = HarvestConfig(out_dir=str(tmp_path / "out"), extract_impl="sql")
+
+    real_record = MetricsLog.record_partitions
+    crashes = []
+
+    def crash_once(self, *args, **kwargs):
+        if not crashes:
+            crashes.append(args)
+            raise RuntimeError("crash before partition metrics")
+        return real_record(self, *args, **kwargs)
+
+    monkeypatch.setattr(MetricsLog, "record_partitions", crash_once)
+    with pytest.raises(RuntimeError, match="crash before partition metrics"):
+        run_harvest(spark, src, cfg, run_id="r")
+
+    res = run_harvest(spark, src, cfg, run_id="r")
+    assert [s["stage"] for s in res["stages"]] == ["lineage"]
+
+    parts = (
+        MetricsLog(spark, os.path.join(cfg.out_dir, "metrics"))
+        .read()
+        .filter((F.col("run_id") == "r") & (F.col("stage") == "edges"))
+        .collect()
+    )
+    edges = LocalSnapshotTable(os.path.join(cfg.out_dir, "edges")).read(spark)
+    assert parts
+    assert len({p.partition_id for p in parts}) == len(parts)
+    assert sum(p.rows_out for p in parts) == edges.count()
 
 
 def test_iceberg_branch_selected_and_writer_calls(spark):
