@@ -113,7 +113,7 @@ def run_curation(
         "shards", lambda: shuffle_shards(selected, n_shards=cfg.n_shards)
     )
     run.checkpoint("shard_stats", lambda: shard_manifest(shards))
-    run.record_partitions("shards", shards)
+    run.record_partitions("shards")
 
     return run.finish(
         run.rows["selected"],

@@ -94,15 +94,16 @@ def _materialize(
     run.checkpoint("nodes", lambda: ccm.build_nodes(valid, labels))
 
     # north_rule lineage, both flavors:
-    # * physical (MetricsLog.record_partitions): rows per materialized
-    #   partition — observability for THIS run's layout, written once per
-    #   run_id (a resume repairs a crash that lost it);
+    # * physical (MetricsLog.record_partitions): rows per written file of
+    #   the edges snapshot, from its footers — observability for THIS run's
+    #   layout, written once per run_id (a resume repairs a crash that
+    #   lost it);
     # * content-keyed (operators/export.partition_lineage, its own
     #   checkpointed stage): per salted-conv_id-bucket rollup that is
     #   deterministic at any parallelism, so a resumed or re-executed run
     #   must reproduce every row bit-for-bit — the cross-run consistency
     #   probe (asserted in test_storage_plans).
-    run.record_partitions("edges", edges)
+    run.record_partitions("edges")
     run.checkpoint("lineage", lambda: partition_lineage(edges))
 
     n_triples = num_triples(edges)

@@ -14,6 +14,13 @@ semantics we rely on:
 * snapshot ids are the checkpoint/resume tokens recorded in the runs table
   (north_rule "resumable from Iceberg snapshot checkpoints").
 
+``write`` takes a Spark DataFrame (a staged Spark write) or a pyarrow Table
+(one in-process ``pq.write_table``, no Spark job); both commit through the
+same manifest update.  The job control plane (``plans/jobs.py``) appends its
+run-log and partition-metric rows as Arrow tables, and ``num_rows`` sums a
+snapshot's parquet footers, so neither a status change nor a stage row count
+costs a Spark job.
+
 The two backends expose one API; cluster deployments flip ``use_iceberg``
 (catalog configured via spark.sql.catalog.*) without touching pipeline code.
 """
@@ -26,6 +33,8 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -67,18 +76,14 @@ class LocalSnapshotTable:
 
     # -- write/read ----------------------------------------------------------
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> str:
-        """Write df as a new snapshot; returns the snapshot id."""
+    def write(self, df: DataFrame | pa.Table, mode: str = "overwrite") -> str:
+        """Write ``df`` (a Spark DataFrame or a pyarrow Table) as a new
+        snapshot; returns the snapshot id."""
         assert mode in ("overwrite", "append")
-        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for name in sorted(os.listdir(staging)):
-            if name.endswith(".parquet"):
-                dst = f"{uuid.uuid4().hex}-{name}"
-                shutil.move(os.path.join(staging, name), os.path.join(self.data_dir, dst))
-                new_files.append(dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        if isinstance(df, pa.Table):
+            new_files = [self._write_arrow(df)]
+        else:
+            new_files = self._write_spark(df)
 
         manifest = self._load()
         parent = self._snapshot(manifest, None)
@@ -92,6 +97,28 @@ class LocalSnapshotTable:
         manifest["current"] = sid
         self._store(manifest)
         return sid
+
+    def _write_spark(self, df: DataFrame) -> list[str]:
+        """Spark's staged write; the part files move into ``data/``."""
+        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
+        df.write.mode("overwrite").parquet(staging)
+        new_files = []
+        for name in sorted(os.listdir(staging)):
+            if name.endswith(".parquet"):
+                dst = f"{uuid.uuid4().hex}-{name}"
+                shutil.move(os.path.join(staging, name), os.path.join(self.data_dir, dst))
+                new_files.append(dst)
+        shutil.rmtree(staging, ignore_errors=True)
+        return new_files
+
+    def _write_arrow(self, table: pa.Table) -> str:
+        """One in-process parquet file, written under a hidden temp name
+        and renamed into place."""
+        dst = f"{uuid.uuid4().hex}-part-00000.parquet"
+        tmp = os.path.join(self.data_dir, f".{dst}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.data_dir, dst))
+        return dst
 
     def read(
         self,
@@ -113,6 +140,21 @@ class LocalSnapshotTable:
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*paths)
+
+    def file_rows(self, snapshot_id: str | None = None) -> list[tuple[str, int]]:
+        """``(file name, row count)`` of each data file of a snapshot, the
+        counts read from the parquet footers."""
+        snap = self._snapshot(self._load(), snapshot_id)
+        if snap is None:
+            raise FileNotFoundError(f"no snapshot {snapshot_id!r} in {self.path}")
+        return [
+            (f, pq.read_metadata(os.path.join(self.data_dir, f)).num_rows)
+            for f in snap["files"]
+        ]
+
+    def num_rows(self, spark: SparkSession, snapshot_id: str | None = None) -> int:
+        """A snapshot's row count from its footers, without a Spark job."""
+        return sum(n for _, n in self.file_rows(snapshot_id))
 
     def rollback(self, snapshot_id: str) -> None:
         manifest = self._load()
@@ -235,6 +277,9 @@ class IcebergTable:
         if snapshot_id:
             return spark.read.option("snapshot-id", snapshot_id).table(self.identifier)
         return spark.read.table(self.identifier)
+
+    def num_rows(self, spark: SparkSession, snapshot_id: str | None = None) -> int:
+        return self.read(spark, snapshot_id).count()
 
     def rollback(self, snapshot_id: str) -> None:
         raise NotImplementedError("use CALL catalog.system.rollback_to_snapshot")

@@ -262,6 +262,24 @@ ex:S a sh:NodeShape ; sh:targetClass ex:T ;
     assert any("malformed cardinality" in s[2] for s in c.skipped)
 
 
+def test_malformed_max_count_keeps_valid_min_count():
+    """The two cardinality bounds parse independently: a malformed
+    sh:maxCount is refused (quoting its own literal) while the valid
+    sh:minCount beside it still compiles."""
+    ttl = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:p ; sh:minCount 1 ; sh:maxCount "many" ;
+                sh:severity sh:Violation ] .
+"""
+    c = load_shacl_shapes(ttl)
+    assert [(s.target_class, s.path, s.min_count, s.max_count)
+            for s in c.cardinality] == [("http://ex/T", "http://ex/p", 1, None)]
+    reasons = [s[2] for s in c.skipped if "malformed cardinality" in s[2]]
+    assert reasons == ["malformed cardinality 'many'"]
+
+
 def test_shacl_compile_fuzz_never_crashes():
     """Random small shapes documents either compile or raise ParseRdfError
     — no other exception class ever escapes the compiler."""
